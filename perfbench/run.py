@@ -25,7 +25,7 @@ import sys
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-WORKLOAD_NAMES = ["registry_reports", "metadata_store", "run_ingest"]
+WORKLOAD_NAMES = ["registry_reports", "run_ingest"]
 
 
 def _fail(msg: str) -> None:
@@ -33,16 +33,16 @@ def _fail(msg: str) -> None:
     sys.exit(2)
 
 
-def tail(values: list[float]) -> tuple[float, float, int]:
+def tail(values: list[float]) -> tuple[float, float, int] | None:
     """Highest-percentile value with at least ten samples beyond it:
     (value, percentile, samples beyond).  With ten or fewer samples no
-    percentile qualifies and the smallest value is reported, with the
-    number of samples beyond it."""
+    percentile qualifies and there is no value (None)."""
     v = sorted(values)
     n = len(v)
-    r = max(0, n - 11)
-    pct = 100.0 * r / (n - 1) if n > 1 else 0.0
-    return v[r], pct, n - 1 - r
+    if n < 11:
+        return None
+    r = n - 11
+    return v[r], 100.0 * r / (n - 1), n - 1 - r
 
 
 def peak_rss_mb(spark) -> float:
@@ -164,10 +164,10 @@ def main() -> int:
         t_setup = time.perf_counter()
         from data_management_python_spark.session import get_spark  # noqa: PLC0415
 
+        # SPARK_GRAFT_CPUS sets local[<cores>]; every other setting is
+        # the engine's own
         spark = get_spark(
             app_name=f"perfbench-{args.workload}",
-            master=f"local[{cores}]",
-            shuffle_partitions=str(cores),
             extra_conf={
                 "spark.ui.showConsoleProgress": "false",
                 "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
@@ -176,7 +176,7 @@ def main() -> int:
         get_spark_s = time.perf_counter() - t_setup
         spark.sparkContext.setLogLevel("ERROR")
         rec = Recorder(spark, tracing=False)
-        wl = WORKLOADS[args.workload](spark, rec, work, args.seed, args.seconds)
+        wl = WORKLOADS[args.workload](spark, rec, work, args.seed)
         wl.setup()
         setup_s = time.perf_counter() - t_setup
         rec.mark_jobs()
@@ -185,14 +185,18 @@ def main() -> int:
         traced = None
         if args.trace:
             # as many cycles again, alternating an untraced reference
-            # cycle and a traced one, so both see the same warm state
+            # cycle and a traced one; every cycle of a workload does the
+            # same work, and both see the same warm state
             install_catalog_wrapper(rec)
             traced = {"ops": [], "wall": 0.0, "ref_wall": 0.0}
             for _ in range(n_cycles):
-                traced["ref_wall"] += loop(wl, rec, 0, cycles=1)[1]
+                _, ref_wall, ref_n = loop(wl, rec, 0, cycles=1)
                 rec.tracing = True
-                t_ops, t_wall, _ = loop(wl, rec, 0, cycles=1)
+                t_ops, t_wall, t_n = loop(wl, rec, 0, cycles=1)
                 rec.tracing = False
+                if not (ref_n and t_n):  # inputs exhausted
+                    break
+                traced["ref_wall"] += ref_wall
                 traced["ops"] += t_ops
                 traced["wall"] += t_wall
             rec.dump(os.path.join(ROOT, ".bench_work", f"spans-{args.workload}-{args.seed}.json"))
@@ -227,9 +231,9 @@ def main() -> int:
         "setup_s": (setup_s, "s"),
         "ops_per_s": (len(ok) / busy if busy else 0.0, "ops/s"),
         "read_p50_s": (statistics.median(reads) if reads else None, "s"),
-        "read_tail_s": (tail(reads)[0] if reads else None, "s"),
+        "read_tail_s": ((tail(reads) or [None])[0], "s"),
         "write_p50_s": (statistics.median(writes) if writes else None, "s"),
-        "write_tail_s": (tail(writes)[0] if writes else None, "s"),
+        "write_tail_s": ((tail(writes) or [None])[0], "s"),
         "failed_op_ratio": (failed / attempted, "fraction"),
         "peak_rss_mb": (rss, "MB"),
         "store_bytes_per_user_byte": (store_ratio, "ratio"),
@@ -239,11 +243,11 @@ def main() -> int:
     print(f"== {args.workload} seed={args.seed} seconds={args.seconds} "
           f"cores={cores} cycles={n_cycles} window_wall={wall:.3f}s", file=err)
     for name, (value, unit) in e2e.items():
-        shown = "n/a (no such operations in this workload)" if value is None else f"{value:.6g} {unit}"
+        shown = "n/a (too few or no such operations)" if value is None else f"{value:.6g} {unit}"
         print(f"  {name:28s} {shown}", file=err)
     for label, vals in (("read", reads), ("write", writes)):
-        if vals:
-            v, pct, beyond = tail(vals)
+        if tail(vals):
+            _v, pct, beyond = tail(vals)
             print(f"  {label}_tail = p{pct:.1f} of {len(vals)} samples, "
                   f"{beyond} beyond it", file=err)
     for kind in sorted({o.name for o in ops}):
@@ -300,7 +304,7 @@ LAYER_SPANS = [
     "plans.cosmx_queries.fn", "plans.cosmx_queries.collect",
     "llmdata.queries.fn", "llmdata.queries.collect",
     "store.fetch_by", "store.exists", "store.store_records",
-    "store.store_with_attributes", "store.upsert", "store.transaction_commit",
+    "store.store_with_attributes", "store.transaction_commit",
     "streaming.discover_new_runs", "streaming.ingest_batch",
     "sources.read_samplesheet", "sources.read_runinfo", "sources.read_demux_stats",
     "sources.list_fastq_files", "sources.count_fastq_reads_many",

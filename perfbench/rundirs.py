@@ -18,15 +18,22 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-# (platform model, instrument id, sheet version, lanes per flowcell)
-PLATFORMS = [
-    ("HISEQ4000", "K00345", "v1", 8),
-    ("MISEQ", "M03291", "v1", 1),
-    ("NEXTSEQ2000", "VH00123", "v2", 4),
+# One cycle of the workload registers one run of every slot: every
+# platform and sheet version, from 4 to 96 samples.  The HiSeq run (v1
+# sheet with lanes and a 10X sample) is valid and goes through the
+# whole pipeline.  The MiSeq run (v1 sheet without lanes) and the
+# NextSeq run (v2 sheet) each carry one injected metadata error, so
+# demux never ran on them: they hold no fastqs or Stats.json and are
+# registered as rejected after validation.  The slots are the same in
+# every cycle and for every seed, so every window and every traced
+# cycle does the same work.
+# (platform model, instrument id, sheet version, lanes per flowcell,
+#  samples, 10X samples, injected error)
+SLOTS = [
+    ("HISEQ4000", "K00345", "v1", 8, 24, 1, False),
+    ("MISEQ", "M03291", "v1", 1, 96, 0, True),
+    ("NEXTSEQ2000", "VH00123", "v2", 4, 4, 0, True),
 ]
-# sample counts cycle through this schedule so every stretch of runs
-# mixes small and large sheets the same way whatever the seed
-SIZE_SCHEDULE = [24, 120, 6, 8, 12, 4, 48, 2]
 TENX_KITS = ["SI-GA-A1", "SI-GA-A2", "SI-GA-B1", "SI-NA-A1"]
 ERROR_KINDS = ["bad_index", "id_equals_name", "unregistered"]
 _BASES = np.array(list("ACGT"))
@@ -40,9 +47,9 @@ class RunSpec:
     platform: str
     version: str
     path: str
-    #: (project, sample_id, sample_name) of every sheet row, registered
-    #: in the metadata store before the run arrives (minus injected
-    #: ``unregistered`` rows)
+    #: (project, sample_id) of every sheet row, registered in the
+    #: metadata store before the run arrives (minus an injected
+    #: ``unregistered`` row)
     metadata: list[tuple[str, str]] = field(default_factory=list)
     error: str | None = None
     experiments: int = 0
@@ -64,42 +71,40 @@ def _write_fastq(path: str, n_reads: int) -> None:
         fh.write(b"".join(_FASTQ_REC % i for i in range(n_reads)))
 
 
-def generate(root: str, seed: int, n_runs: int) -> list[RunSpec]:
-    """Write ``n_runs`` finished run folders under ``root``; one sheet
-    in each block of ten carries an injected metadata error."""
+def generate(root: str, seed: int, cycle: int, write: bool = True) -> list[RunSpec]:
+    """The run folders of one cycle, one per slot, written under
+    ``root`` (with ``write=False`` only their specs).
+
+    The seed draws barcodes, names, read counts, the 10X kit and the
+    kind and row of each injected error; the cycle number only changes
+    identifiers, so all cycles of a seed have the same shape.
+    """
     from data_management_python_spark.sources.singlecell import (  # noqa: PLC0415
         TENX_KIT_BARCODES,
     )
 
-    rng = np.random.RandomState(seed)
-    os.makedirs(root, exist_ok=True)
+    draw = np.random.RandomState(seed)
+    kit = TENX_KITS[int(draw.randint(0, len(TENX_KITS)))]
     specs: list[RunSpec] = []
-    # one run in each block of ten carries an injected metadata error;
-    # the seed decides which (never the first run) and of what kind
-    err_slot = {b * 10 + int(rng.randint(1, 10)) for b in range(n_runs // 10 + 1)}
-    for k in range(n_runs):
-        model, instrument, version, max_lanes = PLATFORMS[k % len(PLATFORMS)]
-        n_samples = SIZE_SCHEDULE[k % len(SIZE_SCHEDULE)]
-        if version == "v2":
-            n_samples = min(n_samples, 6)  # every sample lands on 4 lanes
-        flowcell = f"H{_barcode(rng, 8).replace('T', 'K')}"
-        seqrun_id = f"26{1 + k // 28:02d}{1 + k % 28:02d}_{instrument}_{k + 1:04d}_A{flowcell}"
+    for slot, (model, instrument, version, max_lanes, n_samples, n_tenx, bad) in enumerate(SLOTS):
+        rng = np.random.RandomState([seed, slot])
+        flowcell = f"H{_barcode(rng, 6).replace('T', 'K')}{cycle:03d}"
+        number = cycle * len(SLOTS) + slot + 1
+        seqrun_id = f"26{1 + cycle // 28:02d}{1 + cycle % 28:02d}_{instrument}_{number:04d}_A{flowcell}"
         path = os.path.join(root, seqrun_id)
-        os.makedirs(path)
         spec = RunSpec(seqrun_id, flowcell, model, version, path)
         n_lanes = 1 if model == "MISEQ" else min(max_lanes, 1 + n_samples // 24)
         paired = model != "MISEQ"
-        projects = [f"IGFQ{seed % 1000:03d}{k:03d}{p}" for p in range(1 + n_samples // 40)]
+        tag = f"{seed % 1000:03d}{cycle:03d}{slot}"
+        projects = [f"IGFQ{tag}{p}" for p in range(1 + n_samples // 40)]
         rows = []  # (lane, sample_id, sample_name, index, index2, project, desc)
         used: dict[str, set[str]] = {}
-        tenx_left = list(TENX_KITS)
         for s in range(n_samples):
             lane = str(1 + s % n_lanes)
-            sid = f"IGF{seed % 1000:03d}{k:03d}{s:03d}"
-            name = f"S{k:03d}x{s:03d}{_barcode(rng, 3)}"
+            sid = f"IGF{tag}{s:03d}"
+            name = f"S{tag}x{s:03d}{_barcode(rng, 3)}"
             project = projects[s % len(projects)]
-            if tenx_left and rng.randint(0, 16) == 0 and version == "v1":
-                kit = tenx_left.pop(0)
+            if s < n_tenx:
                 rows.append((lane, sid, name, kit, "", project, "10X"))
                 continue
             while True:
@@ -108,23 +113,22 @@ def generate(root: str, seed: int, n_runs: int) -> list[RunSpec]:
                     used[lane].add(i7 + i5)
                     break
             rows.append((lane, sid, name, i7, i5, project, ""))
-        if k in err_slot:
-            spec.error = ERROR_KINDS[int(rng.randint(0, len(ERROR_KINDS)))]
-            victim = int(rng.randint(0, len(rows)))
+        error = ERROR_KINDS[int(draw.randint(0, len(ERROR_KINDS)))] if bad else None
+        victim = int(draw.randint(0, n_samples)) if bad else -1
+        if bad:
+            spec.error = error
             lane, sid, name, i7, i5, project, desc = rows[victim]
-            if spec.error == "bad_index":
+            if error == "bad_index":
                 rows[victim] = (lane, sid, name, "ACGTXXGT", i5, project, "")
-            elif spec.error == "id_equals_name":
+            elif error == "id_equals_name":
                 rows[victim] = (lane, sid, sid, i7, i5, project, desc)
-        for lane, sid, name, *_rest in rows:
-            spec.metadata.append((_rest[2], sid))
-        if spec.error == "unregistered":
-            spec.metadata.pop(victim)
-        _write_sheet(path, version, model, rows)
-        _write_runinfo(path, seqrun_id, flowcell, instrument, max_lanes)
+        spec.metadata = [
+            (r[5], r[1]) for i, r in enumerate(rows)
+            if not (error == "unregistered" and i == victim)
+        ]
         # demux outputs: one fastq (pair) per expanded sample and lane
-        lanes_of = {}
-        for lane, sid, name, i7, i5, project, desc in rows:
+        lanes_of: dict[str, list] = {}
+        for lane, sid, name, i7, i5, project, desc in ([] if bad else rows):
             if desc == "10X":
                 subs = [
                     (f"{sid}_{j + 1}", f"{name}_{j + 1}", bc, "")
@@ -140,6 +144,7 @@ def generate(root: str, seed: int, n_runs: int) -> list[RunSpec]:
                     lanes_of.setdefault(ln, []).append(
                         (s_id, s_name, b1, b2, project)
                     )
+        fastqs: list[tuple[str, int]] = []
         stats = {"RunId": seqrun_id, "ConversionResults": [], "UnknownBarcodes": []}
         s_index = 0
         for ln in sorted(lanes_of, key=int):
@@ -148,14 +153,10 @@ def generate(root: str, seed: int, n_runs: int) -> list[RunSpec]:
             for s_id, s_name, b1, b2, project in lanes_of[ln]:
                 s_index += 1
                 n_reads = int(rng.randint(1, 20))
-                fq_dir = os.path.join(path, "fastq", project)
-                os.makedirs(fq_dir, exist_ok=True)
-                stem = f"{s_name}_S{s_index}_L{int(ln):03d}"
-                _write_fastq(os.path.join(fq_dir, f"{stem}_R1_001.fastq.gz"), n_reads)
-                spec.files += 1
+                stem = os.path.join("fastq", project, f"{s_name}_S{s_index}_L{int(ln):03d}")
+                fastqs.append((f"{stem}_R1_001.fastq.gz", n_reads))
                 if paired:
-                    _write_fastq(os.path.join(fq_dir, f"{stem}_R2_001.fastq.gz"), n_reads)
-                    spec.files += 1
+                    fastqs.append((f"{stem}_R2_001.fastq.gz", n_reads))
                 spec.runs += 1
                 spec.reads += n_reads
                 number_reads = n_reads * 1000
@@ -178,14 +179,24 @@ def generate(root: str, seed: int, n_runs: int) -> list[RunSpec]:
                 "DemuxResults": demux,
             })
             stats["UnknownBarcodes"].append({"Lane": int(ln), "Barcodes": unknown})
+        spec.files = len(fastqs)
         spec.experiments = len({s for ln in lanes_of.values() for s, *_ in ln})
         spec.lanes = len(lanes_of)
-        with open(os.path.join(path, "Stats.json"), "w") as fh:
-            json.dump(stats, fh, indent=1)
+        specs.append(spec)
+        if not write:
+            continue
+        os.makedirs(path)
+        _write_sheet(path, version, model, rows)
+        _write_runinfo(path, seqrun_id, flowcell, instrument, max_lanes)
+        for rel, n_reads in fastqs:
+            os.makedirs(os.path.dirname(os.path.join(path, rel)), exist_ok=True)
+            _write_fastq(os.path.join(path, rel), n_reads)
+        if not bad:
+            with open(os.path.join(path, "Stats.json"), "w") as fh:
+                json.dump(stats, fh, indent=1)
         # NovaSeq-style empty marker on some runs, RTA text on the rest
         with open(os.path.join(path, "RTAComplete.txt"), "w") as fh:
-            fh.write("" if k % 2 else "RTA 2.11.3.0\n")
-        specs.append(spec)
+            fh.write("" if slot % 2 else "RTA 2.11.3.0\n")
     return specs
 
 

@@ -5,8 +5,11 @@
 - the generators write byte-identical inputs for the same seed and
   different inputs for another seed;
 - every correctness check rejects a wrong result;
+- every cycle of the run-ingest inputs has the same shape and covers
+  every platform and sheet version, a valid run and runs with an
+  injected error;
 - the tail estimator picks the highest percentile with ten samples
-  beyond it.
+  beyond it, and gives no value without one.
 """
 
 from __future__ import annotations
@@ -21,7 +24,6 @@ sys.path[:0] = [ROOT, os.path.join(ROOT, "tools")]
 
 from perfbench import checks, corpus, rundirs  # noqa: E402
 from perfbench.run import tail  # noqa: E402
-from perfbench.workloads import MetadataStore  # noqa: E402
 
 
 def tree_digest(root: str) -> str:
@@ -36,15 +38,13 @@ def tree_digest(root: str) -> str:
     return h.hexdigest()
 
 
-def generated(tmp: str, seed: int, tag: str) -> tuple[str, str, list]:
+def generated(tmp: str, seed: int, tag: str) -> tuple[str, str]:
     c = os.path.join(tmp, f"corpus-{seed}-{tag}")
     corpus.generate(c, seed, 0.002)
     r = os.path.join(tmp, f"runs-{seed}-{tag}")
-    rundirs.generate(r, seed, 12)
-    m = MetadataStore(None, None, tmp, seed, 10)
-    m.n_seqruns, m.experiments, m.runs, m.seqruns, m.exp_attrs = 0, [], [], [], {}
-    rows = [m._registration_rows(m.rng) for _ in range(20)]
-    return tree_digest(c), tree_digest(r), rows
+    for cycle in range(2):
+        rundirs.generate(r, seed, cycle)
+    return tree_digest(c), tree_digest(r)
 
 
 def test_inputs_deterministic() -> None:
@@ -53,7 +53,7 @@ def test_inputs_deterministic() -> None:
         b = generated(tmp, 7, "b")
         c = generated(tmp, 8, "c")
     assert a == b, "same seed must give byte-identical inputs"
-    for i, what in enumerate(("corpus", "run folders", "metadata rows")):
+    for i, what in enumerate(("corpus", "run folders")):
         assert a[i] != c[i], f"another seed must give other {what}"
 
 
@@ -91,12 +91,31 @@ def test_checks_reject_wrong_results() -> None:
     assert checks.check_violations("r", 2, 1)
 
 
+def test_cycles_same_shape() -> None:
+    """Every cycle of a seed registers runs of the same shape, each
+    platform and sheet version among them, and a valid run beside the
+    runs with an injected error."""
+    shapes = [
+        [
+            (s.platform, s.version, s.error, s.experiments, s.runs,
+             s.files, s.reads, s.lanes, len(s.metadata))
+            for s in rundirs.generate("runs", 5, cycle, write=False)
+        ]
+        for cycle in range(3)
+    ]
+    assert shapes[0] == shapes[1] == shapes[2], shapes
+    assert {(p, v) for p, v, *_ in shapes[0]} == {
+        ("HISEQ4000", "v1"), ("MISEQ", "v1"), ("NEXTSEQ2000", "v2")}
+    assert [s[2] is None for s in shapes[0]] == [True, False, False]
+
+
 def test_tail() -> None:
     v = [float(i) for i in range(1, 101)]  # 100 samples
     value, pct, beyond = tail(v)
     assert value == 90.0 and beyond == 10, (value, beyond)
-    value, pct, beyond = tail([3.0, 1.0, 2.0])
-    assert value == 1.0 and beyond == 2
+    value, pct, beyond = tail([float(i) for i in range(11)])
+    assert value == 0.0 and pct == 0.0 and beyond == 10
+    assert tail([3.0, 1.0, 2.0]) is None
 
 
 def main() -> int:

@@ -1,4 +1,4 @@
-"""The three benchmark workloads.
+"""The benchmark workloads.
 
 Every workload is a single-client closed loop: the next operation
 starts only when the previous one has returned.  A workload has a
@@ -33,7 +33,7 @@ REGISTRY_MODULES = {
 # plans.cosmx_queries).  It is fixed so that every seed measures the
 # same cost profile; the seed draws the corpus and the order.
 REPORT_SAMPLE = [
-    "a_grouping_sets", "j_salted_skew_join",
+    "a_grouping_sets", "e_cohort_retention",
     "sim_ann_recall", "d_bloom_probe",
     "a_rollup_revenue", "q12_priority_shipping",
     "g_pagerank", "cosmx_fov_seeding",
@@ -71,12 +71,11 @@ class Workload:
     name = ""
     store_root: str | None = None
 
-    def __init__(self, spark, rec, work: str, seed: int, seconds: int):
+    def __init__(self, spark, rec, work: str, seed: int):
         self.spark = spark
         self.rec = rec
         self.work = work
         self.seed = seed
-        self.seconds = seconds
         self.rng = np.random.RandomState(seed)
         self.user_bytes = 0
         self.phases: dict[str, float] = {}
@@ -114,7 +113,7 @@ class RegistryReports(Workload):
 
     name = "registry_reports"
     SCALE = 0.01  # 60k lineitem rows
-    PASSES = 4
+    PASSES = 3
 
     def setup(self) -> None:
         from data_management_python_spark.operators import session_cache  # noqa: PLC0415
@@ -132,11 +131,11 @@ class RegistryReports(Workload):
         ]
         self.digests: dict[str, list[tuple[int, str]]] = {}
         self.dtypes: dict[str, list] = {}
-        # warm-up: two passes over the sample (codegen, file listing,
-        # session-cache family builds, then the JIT's steepest stretch)
-        for _ in range(2):
-            for _m, q in self.sample:
-                q.fn(self.spark, self.corpus_dir).collect()
+        # warm-up: one pass over the sample (codegen, file listing,
+        # session-cache family builds); a second pass only shaved the
+        # first timed pass by about a fifth, at the cost of a full pass
+        for _m, q in self.sample:
+            q.fn(self.spark, self.corpus_dir).collect()
         self.cache0 = session_cache.stats()
         self.mark("warm_up")
 
@@ -161,8 +160,8 @@ class RegistryReports(Workload):
         return ("read", q.name, fn, check)
 
     def cycle(self):
-        # four passes per cycle: a window is one cycle unless the
-        # engine runs four passes faster than --seconds, so a slower
+        # three passes per cycle: a window is one cycle unless the
+        # engine runs three passes faster than --seconds, so a slower
         # moment on the machine does not also cut the window to fewer,
         # less warmed-up passes
         return [self._op(m, q) for _ in range(self.PASSES) for m, q in self.sample]
@@ -211,7 +210,7 @@ class RegistryReports(Workload):
 
 
 # ----------------------------------------------------------------------
-# shared store helpers
+# run_ingest
 # ----------------------------------------------------------------------
 
 ENA_LAYOUT = {  # bucketed on the natural key point reads use
@@ -221,7 +220,6 @@ ENA_LAYOUT = {  # bucketed on the natural key point reads use
     "run": ["run_igf_id"],
     "seqrun": ["seqrun_igf_id"],
     "file": ["file_path"],
-    "pipeline_seed": ["seed_id"],
 }
 N_BUCKETS = 8
 
@@ -242,7 +240,6 @@ RUN_COLS = (
     "run_id long, run_igf_id string, experiment_id long, seqrun_id long, "
     "status string, lane_number string"
 )
-SEED_COLS = "pipeline_seed_id long, seed_id long, seed_table string, pipeline_id long, status string"
 FILE_COLS = "file_id long, file_path string, location string, status string, size string"
 
 
@@ -251,11 +248,27 @@ def names(ddl: str) -> list[str]:
     return [c.split()[0] for c in ddl.split(", ")]
 
 
-class StoreWorkload(Workload):
-    """Common parts of the two workloads that drive the TableStore."""
+class RunIngest(Workload):
+    """Discover finished run folders and register each one: parse,
+    validate, demux registration, store transaction, barcode QC; keyed
+    status reads of what was registered in between."""
 
-    def open_store(self) -> None:
+    name = "run_ingest"
+    # a window that registers this many cycles ends early: the
+    # metadata of every cycle's samples is loaded during set-up
+    MAX_CYCLES = 12
+    # status reads after each registration: four per run keep a
+    # cycle's reads (these plus the poll) above the eleven a tail needs
+    STATUS_READS = [
+        ("run", "run_igf_id", "run_keys"),
+        ("sample", "sample_igf_id", "registered_samples"),
+        ("seqrun", "seqrun_igf_id", "registered"),
+        ("run", "run_igf_id", "run_keys"),
+    ]
+
+    def setup(self) -> None:
         from data_management_python_spark.store import TableStore  # noqa: PLC0415
+        from perfbench import rundirs  # noqa: PLC0415
 
         self.store_root = os.path.join(self.work, "store")
         self.store = TableStore(self.spark, self.store_root, attr_n_buckets=N_BUCKETS)
@@ -264,26 +277,61 @@ class StoreWorkload(Workload):
         self.acked: dict[str, set[tuple]] = {}
         self.fs_written = [0, 0]  # files, bytes (traced loop only)
         self.traced_user_bytes = 0
+        self.mark("open_store")
+        self.runs_root = os.path.join(self.work, "runs")
+        os.makedirs(self.runs_root)
+        # the lab registers projects and samples before their runs
+        # arrive: the metadata of every cycle is loaded up front
+        planned = [
+            spec for c in range(self.MAX_CYCLES)
+            for spec in rundirs.generate(self.runs_root, self.seed, c, write=False)
+        ]
+        projects = sorted({p for s in planned for p, _ in s.metadata})
+        pid = {p: i for i, p in enumerate(projects)}
+        samples = sorted({(sid, p) for s in planned for p, sid in s.metadata})
+        self.sample_ids = {sid: i for i, (sid, _p) in enumerate(samples)}
+        prow = [(i, p, "ACTIVE", "FASTQ") for p, i in pid.items()]
+        srow = [
+            (i, sid, 9606, "Homo sapiens", "ACTIVE", pid[p])
+            for i, (sid, p) in enumerate(samples)
+        ]
+        self.store_records("project", prow, PROJECT_COLS)
+        self.store_records("sample", srow, SAMPLE_COLS)
+        self.mark("load")
+        self.ack("project", prow)
+        self.ack("sample", srow)
+        # warm-up of the keyed reads only: the status reads are served
+        # warm, and without it the first reads of the window form a
+        # slower cluster that the median of 13 reads straddles
+        self.fetch_by("sample", sample_igf_id=srow[0][1])
+        self.exists("sample", sample_igf_id=srow[0][1])
+        self.mark("warm_up")
+        self.specs: dict[str, object] = {}
+        self.n_cycles = 0
+        self.ids = {"seqrun": 0, "experiment": 0, "run": 0, "file": 0}
+        self.registered: list[str] = []
+        self.flagged = 0
+        self.pending: list[str] = []
+        self.run_keys: list[str] = []
+        self.registered_samples: list[str] = []
+        # no warm-up: registration is a scheduled job that starts its
+        # own session, so the first registration pays the cold start
+        self.batch = 1
 
-    def count_user_bytes(self, rows) -> None:
-        n = sum(logical_bytes(r) for r in rows)
-        self.user_bytes += n
-        if self.rec.tracing:
-            self.traced_user_bytes += n
-
-    def df(self, rows, schema):
-        return self.spark.createDataFrame(rows, schema)
+    # -- store verbs, each inside its own span --------------------------
 
     def ack(self, table: str, rows) -> None:
         """Record rows the store acknowledged (for read-back and the
         logical-bytes denominator)."""
-        self.count_user_bytes(rows)
+        n = sum(logical_bytes(r) for r in rows)
+        self.user_bytes += n
+        if self.rec.tracing:
+            self.traced_user_bytes += n
         self.acked.setdefault(table, set()).update(tuple(r) for r in rows)
 
-    # store verbs, each inside its own span
     def store_records(self, table, rows, schema):
         with self.rec.span("store.store_records"):
-            self.store.store_records(table, self.df(rows, schema))
+            self.store.store_records(table, self.spark.createDataFrame(rows, schema))
 
     def store_with_attributes(self, table, data, key_column):
         with self.rec.span("store.store_with_attributes"):
@@ -296,312 +344,6 @@ class StoreWorkload(Workload):
     def exists(self, table, **filters):
         with self.rec.span("store.exists"):
             return self.store.exists(table, **filters)
-
-    def write_op(self, name, body, check):
-        """A write operation: ``body`` runs inside one store
-        transaction; the traced run also counts the files it wrote."""
-        rec = self.rec
-
-        def fn():
-            before = tree_stats(self.store_root) if rec.tracing else None
-            with rec.span("store.transaction_commit"):
-                with self.store.transaction():
-                    out = body()
-            if rec.tracing:
-                after = tree_stats(self.store_root)
-                new = [p for p, v in after.items() if before.get(p) != v]
-                self.fs_written[0] += len(new)
-                self.fs_written[1] += sum(after[p][0] for p in new)
-            return out
-
-        return ("write", name, fn, check)
-
-    def read_back(self, tables: dict[str, list[str]]) -> dict[str, set[tuple]]:
-        out = {}
-        for table, cols in tables.items():
-            out[table] = {
-                tuple(r) for r in self.store.table(table).select(*cols).collect()
-            }
-        return out
-
-    def store_layer_metrics(self) -> dict[str, float]:
-        files_live = sum(len(f) for _, _, f in os.walk(self.store_root))
-        return {
-            "store.files_written": self.fs_written[0],
-            "store.bytes_written": self.fs_written[1],
-            "store.write_amplification": (
-                self.fs_written[1] / self.traced_user_bytes
-                if self.traced_user_bytes else 0.0
-            ),
-            "store.files_live": files_live,
-        }
-
-
-# ----------------------------------------------------------------------
-# metadata_store
-# ----------------------------------------------------------------------
-
-PLATFORMS = ["HISEQ4000", "NOVASEQ6000", "NEXTSEQ2000", "MISEQ"]
-READ_KINDS = ["sample", "experiment", "run", "seqrun", "experiment_attribute"]
-
-
-class MetadataStore(StoreWorkload):
-    """Point reads and small registration transactions on an ENA-style
-    metadata store."""
-
-    name = "metadata_store"
-    N_PROJECTS = 16
-    N_SAMPLES = 320
-    READS_PER_WRITE = 4
-
-    def setup(self) -> None:
-        self.open_store()
-        self.mark("open_store")
-        rng = self.rng
-        tag = f"{self.seed % 100000:05d}"
-        projects = [
-            (p, f"IGFQ{tag}{p:03d}", "ACTIVE", "FASTQ") for p in range(self.N_PROJECTS)
-        ]
-        samples = [
-            (s, f"IGF{tag}{s:05d}", 9606, "Homo sapiens", "ACTIVE", s % self.N_PROJECTS)
-            for s in range(self.N_SAMPLES)
-        ]
-        tissues = ["blood", "liver", "skin", "brain", "lung"]
-        sample_attrs = [
-            (s, tissues[rng.randint(0, 5)], f"donor{rng.randint(0, 60)}", f"b{rng.randint(0, 9)}")
-            for s in range(self.N_SAMPLES)
-        ]
-        self.n_seqruns = 0
-        self.experiments: list[tuple] = []
-        self.runs: list[tuple] = []
-        self.seqruns: list[tuple] = []
-        self.exp_attrs: dict[int, int] = {}
-        self.seeds: dict[int, str] = {}
-        self.store_records("project", projects, PROJECT_COLS)
-        # samples and their EAV attributes land in one call
-        self.store_with_attributes("sample", self.df(
-            [s + a[1:] for s, a in zip(samples, sample_attrs)],
-            SAMPLE_COLS + ", tissue string, donor string, batch string",
-        ), "sample_id")
-        self.ack("project", projects)
-        self.ack("sample", samples)
-        for s, t, d, b in sample_attrs:
-            self.ack("sample_attribute", [(s, "tissue", t), (s, "donor", d), (s, "batch", b)])
-        # history: a registration per sample batch, loaded in bulk
-        ex_rows, run_rows, sr_rows, seed_rows, attr_rows = [], [], [], [], []
-        for i in range(self.N_SAMPLES // 10):
-            e, r, s, sd, a = self._registration_rows(rng)
-            ex_rows += e
-            run_rows += r
-            sr_rows += s
-            seed_rows += sd
-            attr_rows += a
-        seed_rows = [(i, sid, t, p, "FINISHED") for i, sid, t, p, _st in seed_rows]
-        for sd in seed_rows:
-            self.seeds[sd[1]] = "FINISHED"
-        self.store_records("seqrun", sr_rows, SEQRUN_COLS)
-        exp_wide = self.df(
-            [e + (a[0], a[1]) for e, a in zip(ex_rows, attr_rows)],
-            EXPERIMENT_COLS + ", kit string, chemistry string",
-        )
-        self.store_with_attributes("experiment", exp_wide, "experiment_id")
-        self.store_records("run", run_rows, RUN_COLS)
-        self.store_records("pipeline_seed", seed_rows, SEED_COLS)
-        self.ack("seqrun", sr_rows)
-        self.ack("experiment", ex_rows)
-        self.ack("run", run_rows)
-        self.ack("pipeline_seed", seed_rows)
-        for e, a in zip(ex_rows, attr_rows):
-            self.ack("experiment_attribute", [(e[0], "kit", a[0]), (e[0], "chemistry", a[1])])
-        self.last_seed: int | None = None
-        self.mark("inputs_and_load")
-        # warm-up: one operation of every read kind and one write
-        for kind, name, fn, check in self._cycle(warm=True):
-            check(fn())
-        self.mark("warm_up")
-
-    def _registration_rows(self, rng):
-        """Rows of one sequencing-run registration: a seqrun, one
-        experiment for a random sample with its EAV attributes, a run
-        per lane and the pipeline seed of the seqrun."""
-        k = self.n_seqruns
-        self.n_seqruns += 1
-        tag = f"{self.seed % 100000:05d}"
-        platform = PLATFORMS[rng.randint(0, len(PLATFORMS))]
-        flowcell = f"HFC{tag}{k:05d}"
-        seqrun = (k, f"260101_{platform[:2]}{tag}_{k:04d}_{flowcell}", "N", flowcell)
-        s = int(rng.randint(0, self.N_SAMPLES))
-        e_id = len(self.experiments)
-        exp_igf = f"IGF{tag}{s:05d}_{platform}_{e_id}"
-        exp = (
-            e_id, exp_igf, s % self.N_PROJECTS, s, f"lib{e_id}", "GENOMIC", "WGS",
-            "WGS", "PAIRED", "ACTIVE", platform,
-        )
-        lanes = 1 + int(rng.randint(0, 2))
-        runs = [
-            (len(self.runs) + j, f"{exp_igf}_{flowcell}_{j + 1}", e_id, k, "ACTIVE", str(j + 1))
-            for j in range(lanes)
-        ]
-        attrs = (f"kit{rng.randint(0, 6)}", f"chem{rng.randint(0, 3)}")
-        self.experiments.append(exp)
-        self.runs += runs
-        self.seqruns.append(seqrun)
-        self.exp_attrs[e_id] = 2
-        seed = [(k, k, "seqrun", 1, "SEEDED")]
-        return [exp], runs, [seqrun], seed, [attrs]
-
-    def _pick(self, items: list):
-        """Skewed key popularity: half the reads go to the ten most
-        recently written keys, the rest spread over all keys."""
-        n = len(items)
-        if self.rng.randint(0, 2) == 0:
-            return items[n - 1 - int(self.rng.randint(0, min(10, n)))]
-        return items[int(self.rng.randint(0, n))]
-
-    def _read(self, kind: str):
-        if kind == "sample":
-            s = int(self.rng.randint(0, self.N_SAMPLES))
-            key = f"IGF{self.seed % 100000:05d}{s:05d}"
-            return ("read", "fetch_by.sample",
-                    lambda: self.fetch_by("sample", sample_igf_id=key),
-                    lambda rows: checks.check_fetch(rows, "sample_igf_id", key, 1))
-        if kind == "experiment":
-            key = self._pick(self.experiments)[1]
-            return ("read", "fetch_by.experiment",
-                    lambda: self.fetch_by("experiment", experiment_igf_id=key),
-                    lambda rows: checks.check_fetch(rows, "experiment_igf_id", key, 1))
-        if kind == "run":
-            key = self._pick(self.runs)[1]
-            return ("read", "fetch_by.run",
-                    lambda: self.fetch_by("run", run_igf_id=key),
-                    lambda rows: checks.check_fetch(rows, "run_igf_id", key, 1))
-        if kind == "seqrun":
-            key = self._pick(self.seqruns)[1]
-            return ("read", "exists.seqrun",
-                    lambda: self.exists("seqrun", seqrun_igf_id=key),
-                    lambda got: checks.check_exists(got, True, f"seqrun {key}"))
-        e_id = self._pick(self.experiments)[0]
-        want = self.exp_attrs[e_id]
-        return ("read", "fetch_by.experiment_attribute",
-                lambda: self.fetch_by("experiment_attribute", experiment_id=e_id),
-                lambda rows: checks.check_fetch(rows, "experiment_id", e_id, want))
-
-    def _write(self):
-        exp, runs, seqrun, seed, attrs = self._registration_rows(self.rng)
-        prev = self.last_seed
-
-        def body():
-            self.store_records("seqrun", seqrun, SEQRUN_COLS)
-            self.store_with_attributes(
-                "experiment",
-                self.df([exp[0] + attrs[0]], EXPERIMENT_COLS + ", kit string, chemistry string"),
-                "experiment_id",
-            )
-            self.store_records("run", runs, RUN_COLS)
-            # the new seqrun is seeded; the previous one finished
-            ups = list(seed)
-            if prev is not None:
-                ups.append((prev, prev, "seqrun", 1, "FINISHED"))
-            with self.rec.span("store.upsert"):
-                self.store.upsert(
-                    "pipeline_seed", self.df(ups, SEED_COLS),
-                    on=["pipeline_id", "seed_id", "seed_table"],
-                )
-            return ups
-
-        def check(ups):
-            # acknowledged: record for the end-of-run read-back
-            self.ack("seqrun", seqrun)
-            self.ack("experiment", exp)
-            self.ack("run", runs)
-            self.ack("experiment_attribute", [
-                (exp[0][0], "kit", attrs[0][0]), (exp[0][0], "chemistry", attrs[0][1]),
-            ])
-            for row in ups:
-                self.seeds[row[1]] = row[4]
-            self.count_user_bytes(ups)
-            self.last_seed = seed[0][1]
-            return None
-
-        return self.write_op("register", body, check)
-
-    def _cycle(self, warm: bool = False):
-        if warm:
-            kinds = READ_KINDS
-        else:
-            kinds = [READ_KINDS[i] for i in self.rng.randint(0, len(READ_KINDS), self.READS_PER_WRITE)]
-        # a read draws its key when the cycle is built, so it can
-        # target any key acknowledged before this cycle began
-        return [self._read(k) for k in kinds] + [self._write()]
-
-    def cycle(self):
-        return self._cycle()
-
-    def verify(self):
-        seeds = {(sid, sid, "seqrun", 1, st) for sid, st in self.seeds.items()}
-        want = dict(self.acked)
-        want["pipeline_seed"] = seeds
-        got = self.read_back({
-            "project": names(PROJECT_COLS),
-            "sample": names(SAMPLE_COLS),
-            "sample_attribute": ["sample_id", "attribute_name", "attribute_value"],
-            "seqrun": names(SEQRUN_COLS),
-            "experiment": names(EXPERIMENT_COLS),
-            "experiment_attribute": ["experiment_id", "attribute_name", "attribute_value"],
-            "run": names(RUN_COLS),
-            "pipeline_seed": names(SEED_COLS),
-        })
-        return [(None, r) for r in checks.check_readback(want, got)]
-
-    def layer_metrics(self):
-        return self.store_layer_metrics()
-
-
-# ----------------------------------------------------------------------
-# run_ingest
-# ----------------------------------------------------------------------
-
-
-class RunIngest(StoreWorkload):
-    """Discover finished run folders and register each one: parse,
-    validate, demux registration, store transaction, barcode QC."""
-
-    name = "run_ingest"
-
-    def setup(self) -> None:
-        from perfbench import rundirs  # noqa: PLC0415
-
-        self.open_store()
-        self.mark("open_store")
-        self.runs_root = os.path.join(self.work, "runs")
-        # more runs than one window registers at today's speed; an
-        # engine that registers them all ends the window early
-        n_runs = 6
-        self.specs = {s.seqrun_id: s for s in rundirs.generate(self.runs_root, self.seed, n_runs)}
-        self.mark("inputs")
-        projects = sorted({p for s in self.specs.values() for p, _ in s.metadata})
-        pid = {p: i for i, p in enumerate(projects)}
-        samples = sorted({(sid, p) for s in self.specs.values() for p, sid in s.metadata})
-        self.sample_ids = {sid: i for i, (sid, _p) in enumerate(samples)}
-        prow = [(i, p, "ACTIVE", "FASTQ") for p, i in pid.items()]
-        srow = [
-            (i, sid, 9606, "Homo sapiens", "ACTIVE", pid[p])
-            for i, (sid, p) in enumerate(samples)
-        ]
-        self.store_records("project", prow, PROJECT_COLS)
-        self.store_records("sample", srow, SAMPLE_COLS)
-        self.mark("load")
-        self.ack("project", prow)
-        self.ack("sample", srow)
-        self.ids = {"seqrun": 0, "experiment": 0, "run": 0, "file": 0}
-        self.registered: list[str] = []
-        self.flagged = 0
-        self.pending: list[str] = []
-        self.run_keys: list[str] = []
-        self.registered_samples: list[str] = []
-        # no warm-up: registration is a scheduled job that starts its
-        # own session, so a run's registration pays the cold start
-        self.batch = 1
 
     # -- operations ---------------------------------------------------
 
@@ -642,6 +384,8 @@ class RunIngest(StoreWorkload):
         out = {}
 
         def body():
+            if spec.seqrun_id not in self.pending:
+                raise RuntimeError(f"the poll did not report {spec.seqrun_id}")
             with rec.span("sources.read_samplesheet"):
                 sheet = read_samplesheet(spark, os.path.join(path, "SampleSheet.csv"))
             with rec.span("sources.read_runinfo"):
@@ -706,6 +450,20 @@ class RunIngest(StoreWorkload):
             out.update(seqrun=rows["seqrun"], violations=0, rows=rows, qc_lanes=len(lanes))
             return out
 
+        def fn():
+            # one store transaction; the traced run also counts the
+            # files it wrote
+            before = tree_stats(self.store_root) if rec.tracing else None
+            with rec.span("store.transaction_commit"):
+                with self.store.transaction():
+                    result = body()
+            if rec.tracing:
+                after = tree_stats(self.store_root)
+                new = [p for p, v in after.items() if before.get(p) != v]
+                self.fs_written[0] += len(new)
+                self.fs_written[1] += sum(after[p][0] for p in new)
+            return result
+
         def check(result):
             self.registered.append(spec.seqrun_id)
             self.flagged += result["violations"]
@@ -725,7 +483,7 @@ class RunIngest(StoreWorkload):
                 spec.seqrun_id, result["violations"], 0 if spec.error is None else 1
             )
 
-        return self.write_op("register_run", body, check)
+        return ("write", "register_run", fn, check)
 
     def _registration_rows(self, spec, seqrun_id, flowcell, reg_rows, files_rows):
         sizes = {r.file_path: r.size for r in files_rows}
@@ -759,50 +517,47 @@ class RunIngest(StoreWorkload):
             "file": file_rows,
         }
 
-    def cycle(self):
-        """Poll, register the first run found, then eight status reads:
-        keyed fetches of recently registered runs and samples, and
-        existence probes of recently registered seqruns."""
-        if not set(self.specs) - set(self.registered):
-            return None  # every generated run is registered
+    def _status_read(self, table, key, pool):
+        """A keyed read of one of the ten most recently registered keys
+        of ``pool``: ``exists`` on seqruns, ``fetch_by`` otherwise."""
         held = {}
 
-        def register():
-            if not self.pending:
-                raise RuntimeError("the poll found no unregistered run")
-            held["op"] = self._register(self.specs[self.pending[0]], self.batch)
+        def fn():
+            keys = getattr(self, pool)
+            held["key"] = keys[len(keys) - 1 - int(self.rng.randint(0, min(10, len(keys))))]
+            if table == "seqrun":
+                return self.exists(table, **{key: held["key"]})
+            return self.fetch_by(table, **{key: held["key"]})
+
+        def check(got):
+            if table == "seqrun":
+                return checks.check_exists(got, True, f"seqrun {held['key']}")
+            return checks.check_fetch(got, key, held["key"], 1)
+
+        name = ("exists." if table == "seqrun" else "fetch_by.") + table
+        return ("read", name, fn, check)
+
+    def cycle(self):
+        """One run of every slot finishes on the sequencers (its folder
+        is written outside any operation); then a poll, and for each
+        run its registration followed by four status reads."""
+        from perfbench import rundirs  # noqa: PLC0415
+
+        if self.n_cycles >= self.MAX_CYCLES:
+            return None  # every planned cycle is registered
+        specs = rundirs.generate(self.runs_root, self.seed, self.n_cycles)
+        self.n_cycles += 1
+        ops = [self._poll()]
+        for spec in specs:
+            self.specs[spec.seqrun_id] = spec
+            ops.append(self._register(spec, self.batch))
             self.batch += 1
-            return held["op"][2]()
-
-        def lookup(i, table, key, pool, want):
-            def fn():
-                keys = getattr(self, pool)
-                n = len(keys)
-                held[i] = keys[n - 1 - int(self.rng.randint(0, min(10, n)))]
-                if table == "seqrun":
-                    return self.exists(table, **{key: held[i]})
-                return self.fetch_by(table, **{key: held[i]})
-
-            def check(got):
-                if table == "seqrun":
-                    return checks.check_exists(got, want, f"seqrun {held[i]}")
-                return checks.check_fetch(got, key, held[i], want)
-
-            name = ("exists." if table == "seqrun" else "fetch_by.") + table
-            return ("read", name, fn, check)
-
-        reads = [
-            ("run", "run_igf_id", "run_keys", 1),
-            ("sample", "sample_igf_id", "registered_samples", 1),
-            ("seqrun", "seqrun_igf_id", "registered", True),
-            ("run", "run_igf_id", "run_keys", 1),
-        ] * 2
-        return [
-            self._poll(),
-            ("write", "register_run", register, lambda r: held["op"][3](r)),
-        ] + [lookup(i, *r) for i, r in enumerate(reads)]
+            ops += [self._status_read(*r) for r in self.STATUS_READS]
+        return ops
 
     def verify(self):
+        from pyspark.sql import functions as F  # noqa: PLC0415
+
         specs = [self.specs[s] for s in self.registered]
         want = {
             "seqruns": len(specs),
@@ -814,8 +569,6 @@ class RunIngest(StoreWorkload):
             "violations_flagged": sum(1 for s in specs if s.error),
         }
         t = self.store.table
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
         got = {
             "seqruns": t("seqrun").count(),
             "rejected_seqruns": t("seqrun").filter(F.col("reject_run") == "Y").count(),
@@ -829,19 +582,28 @@ class RunIngest(StoreWorkload):
             "violations_flagged": self.flagged,
         }
         fails = [(None, r) for r in checks.check_totals(want, got)]
-        got_rows = self.read_back({
-            "seqrun": names(SEQRUN_COLS),
-            "file": names(FILE_COLS),
-        })
+        tables = {"seqrun": names(SEQRUN_COLS), "file": names(FILE_COLS)}
+        got_rows = {
+            table: {tuple(r) for r in t(table).select(*cols).collect()}
+            for table, cols in tables.items()
+        }
         fails += [(None, r) for r in checks.check_readback(
             {k: self.acked.get(k, set()) for k in got_rows}, got_rows
         )]
         return fails
 
     def layer_metrics(self):
-        m = self.store_layer_metrics()
-        m["validation.violations_flagged"] = self.flagged
-        return m
+        files_live = sum(len(f) for _, _, f in os.walk(self.store_root))
+        return {
+            "store.files_written": self.fs_written[0],
+            "store.bytes_written": self.fs_written[1],
+            "store.write_amplification": (
+                self.fs_written[1] / self.traced_user_bytes
+                if self.traced_user_bytes else 0.0
+            ),
+            "store.files_live": files_live,
+            "validation.violations_flagged": self.flagged,
+        }
 
 
-WORKLOADS = {w.name: w for w in (RegistryReports, MetadataStore, RunIngest)}
+WORKLOADS = {w.name: w for w in (RegistryReports, RunIngest)}
