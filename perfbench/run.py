@@ -8,9 +8,9 @@ engine's own ``session.get_spark``, runs the workload's single-client
 closed loop for at least ``--seconds`` (stopping at a cycle boundary),
 checks every result, and prints one JSON object as the last line of
 stdout.  A human-readable report goes to stderr.  With ``--trace 1``
-the untraced window is followed by as many cycles again, alternating
-an untraced reference cycle with a traced one, and the JSON carries
-the per-layer metrics and the tracing overhead.
+the untraced window is followed by up to two pairs of cycles, an
+untraced reference cycle and a traced one in each, and the JSON
+carries the per-layer metrics and the tracing overhead.
 """
 
 from __future__ import annotations
@@ -61,8 +61,9 @@ def peak_rss_mb(spark) -> float:
 
 
 def loop(workload, rec, seconds: float, cycles: int | None = None) -> tuple[list, float, int]:
-    """Closed loop over whole cycles until ``seconds`` have passed (or
-    exactly ``cycles`` cycles).  Returns (op records, wall s, cycles)."""
+    """Closed loop over whole cycles until ``seconds`` have passed and
+    the workload's ``MIN_CYCLES`` have run (or exactly ``cycles``
+    cycles).  Returns (op records, wall s, cycles)."""
     first = len(rec.ops)
     t0 = time.perf_counter()
     n = 0
@@ -70,8 +71,9 @@ def loop(workload, rec, seconds: float, cycles: int | None = None) -> tuple[list
         ops = workload.cycle()
         if not ops:  # inputs exhausted: the window ends early
             break
-        for kind, name, fn, check in ops:
+        for slot, (kind, name, fn, check) in enumerate(ops):
             op, result = rec.run_op(kind, name, fn)
+            op.slot = slot
             if op.ok:
                 err = check(result)
                 if err:
@@ -80,9 +82,22 @@ def loop(workload, rec, seconds: float, cycles: int | None = None) -> tuple[list
         if cycles is not None:
             if n >= cycles:
                 break
-        elif time.perf_counter() - t0 >= seconds:
+        elif n >= workload.MIN_CYCLES and time.perf_counter() - t0 >= seconds:
             break
     return rec.ops[first:], time.perf_counter() - t0, n
+
+
+def ops_per_s(ops) -> float:
+    """Completed operations per second of a typical cycle: the cycle's
+    operations over the sum, across its slots, of each slot's median
+    latency over the window's cycles (with one cycle: the summed
+    latency), scaled by the share of operations that succeeded."""
+    by_slot: dict[int, list[float]] = {}
+    for o in ops:
+        by_slot.setdefault(o.slot, []).append(o.latency_s)
+    cycle_s = sum(statistics.median(v) for v in by_slot.values())
+    ok = sum(1 for o in ops if o.ok) / len(ops) if ops else 0.0
+    return ok * len(by_slot) / cycle_s if cycle_s else 0.0
 
 
 def install_catalog_wrapper(rec) -> None:
@@ -184,12 +199,13 @@ def main() -> int:
         ops, wall, n_cycles = loop(wl, rec, args.seconds)
         traced = None
         if args.trace:
-            # as many cycles again, alternating an untraced reference
-            # cycle and a traced one; every cycle of a workload does the
-            # same work, and both see the same warm state
+            # up to TRACED_PAIRS pairs of cycles, alternating an untraced
+            # reference cycle and a traced one; every cycle of a
+            # workload does the same work, and both see the same warm
+            # state
             install_catalog_wrapper(rec)
             traced = {"ops": [], "wall": 0.0, "ref_wall": 0.0}
-            for _ in range(n_cycles):
+            for _ in range(min(n_cycles, TRACED_PAIRS)):
                 _, ref_wall, ref_n = loop(wl, rec, 0, cycles=1)
                 rec.tracing = True
                 t_ops, t_wall, t_n = loop(wl, rec, 0, cycles=1)
@@ -226,10 +242,9 @@ def main() -> int:
     ok = [o for o in ops if o.ok]
     reads = [o.latency_s for o in ok if o.kind == "read"]
     writes = [o.latency_s for o in ok if o.kind == "write"]
-    busy = sum(o.latency_s for o in ops)
     e2e = {
         "setup_s": (setup_s, "s"),
-        "ops_per_s": (len(ok) / busy if busy else 0.0, "ops/s"),
+        "ops_per_s": (ops_per_s(ops), "ops/s"),
         "read_p50_s": (statistics.median(reads) if reads else None, "s"),
         "read_tail_s": ((tail(reads) or [None])[0], "s"),
         "write_p50_s": (statistics.median(writes) if writes else None, "s"),
@@ -294,6 +309,8 @@ def main() -> int:
 # they exist; peak_rss_mb is printed, its run-to-run spread (JVM heap
 # growth follows GC timing) is too wide to gate.
 GATED = ["setup_s", "ops_per_s", "read_p50_s", "read_tail_s"]
+# pairs of reference and traced cycles a traced run adds at most
+TRACED_PAIRS = 2
 
 LAYER_SPANS = [
     "catalog.load_table",

@@ -9,13 +9,17 @@
   every platform and sheet version, a valid run and runs with an
   injected error;
 - the tail estimator picks the highest percentile with ten samples
-  beyond it, and gives no value without one.
+  beyond it, and gives no value without one;
+- the throughput estimator takes each slot's median over the cycles;
+- over a registry_reports window the median and the tail read fall in
+  the middle of one query's group of latencies.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import statistics
 import sys
 import tempfile
 
@@ -23,7 +27,9 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [ROOT, os.path.join(ROOT, "tools")]
 
 from perfbench import checks, corpus, rundirs  # noqa: E402
-from perfbench.run import tail  # noqa: E402
+from perfbench.run import ops_per_s, tail  # noqa: E402
+from perfbench.trace import OpRecord  # noqa: E402
+from perfbench.workloads import REPORT_SAMPLE, RegistryReports  # noqa: E402
 
 
 def tree_digest(root: str) -> str:
@@ -116,6 +122,29 @@ def test_tail() -> None:
     value, pct, beyond = tail([float(i) for i in range(11)])
     assert value == 0.0 and pct == 0.0 and beyond == 10
     assert tail([3.0, 1.0, 2.0]) is None
+
+
+def test_ops_per_s() -> None:
+    # one cycle: completed operations over the summed latency
+    one = [OpRecord(i, "read", "q", lat, slot=i) for i, lat in enumerate([1.0, 2.0, 1.0])]
+    assert abs(ops_per_s(one) - 3 / 4.0) < 1e-12
+    one[0].ok = False
+    assert abs(ops_per_s(one) - 2 / 4.0) < 1e-12
+    # three cycles of two slots: a slow cycle does not move the medians
+    ops = [
+        OpRecord(0, "read", "a", a, slot=0) for a in (1.0, 1.0, 9.0)
+    ] + [OpRecord(0, "read", "b", b, slot=1) for b in (2.0, 3.0, 2.0)]
+    assert abs(ops_per_s(ops) - 2 / 3.0) < 1e-12
+
+
+def test_registry_window_ranks() -> None:
+    """With the sample's queries well apart in cost, the median read and
+    the tail read are each the middle latency of one query."""
+    n_q, passes = len(REPORT_SAMPLE), RegistryReports.MIN_CYCLES
+    lat = [q + 0.01 * p for q in range(1, n_q + 1) for p in range(passes)]
+    mid = 0.01 * (passes // 2)
+    for v in (statistics.median(lat), tail(lat)[0]):
+        assert abs(v - mid - round(v - mid)) < 1e-9, v
 
 
 def main() -> int:

@@ -34,6 +34,7 @@ class OpRecord:
     latency_s: float
     ok: bool = True
     error: str | None = None
+    slot: int = 0  # position in its cycle
     jobs: int = 0
     stages: int = 0
     tasks: int = 0
